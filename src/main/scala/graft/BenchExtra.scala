@@ -37,8 +37,8 @@ object BenchExtra {
       // one untimed warm-up (JIT + codegen), like the driver bench
       try fn(spark, sfDir).count() catch { case e: Throwable =>
         System.err.println(s"[extra] $name warmup failed: ${e.getMessage}") }
-      // a failing query reports -1.0 reps (the Bench convention) so the
-      // remaining queries still run
+      // a failing rep reports -1.0 (the Bench convention) so the
+      // remaining reps and queries still run
       val counts = (1 to reps).map { i =>
         spark.sparkContext.setJobDescription(s"$name count rep$i")
         try time(fn(spark, sfDir).count()) catch { case _: Throwable => -1.0 }
@@ -50,7 +50,9 @@ object BenchExtra {
       }
       spark.sparkContext.setJobDescription(null)
       def fmt(v: Seq[Double]) = v.map(x => f"$x%.3f").mkString("[", ",", "]")
-      println(f"""{"query":"$name","count_min":${counts.min}%.3f,"noop_min":${noops.min}%.3f,"count_reps":${fmt(counts)},"noop_reps":${fmt(noops)}}""")
+      // the min of the successful reps; -1.0 only when every rep failed
+      def okMin(v: Seq[Double]) = v.filter(_ >= 0).minOption.getOrElse(-1.0)
+      println(f"""{"query":"$name","count_min":${okMin(counts)}%.3f,"noop_min":${okMin(noops)}%.3f,"count_reps":${fmt(counts)},"noop_reps":${fmt(noops)}}""")
     }
     spark.stop()
   }

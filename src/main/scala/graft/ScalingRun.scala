@@ -14,19 +14,7 @@ object ScalingRun {
     val reps = if (args.length > 1) args(1).toInt else 3
     val spark = SparkSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // defaultParallelism races executor registration in local-cluster
-    // mode (returns 2 until workers connect) — derive cores from the
-    // master string instead: local-cluster[n,c,mem] or local[n]
-    val master = spark.sparkContext.master
-    val cores: Int = {
-      val lc = "local-cluster\\[(\\d+),(\\d+),\\d+\\]".r
-      val l = "local\\[(\\d+)\\]".r
-      master match {
-        case lc(n, c) => n.toInt * c.toInt
-        case l(n) => n.toInt
-        case _ => math.max(spark.sparkContext.defaultParallelism, 4)
-      }
-    }
+    val cores = graft.job.Partitioning.masterCores(spark.sparkContext, 4)
     val spec = graft.job.Partitioning.defaultSpec(cores)
 
     def pass(): Double = {

@@ -1,21 +1,37 @@
 package graft.job
 
+import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.AccumulatorV2
 import graft.io.Tables
-import graft.pdf.{PdfExtractor, Glyphs}
+import graft.pdf.PdfExtractor
 import graft.html.HtmlExtractor
 
 /** The extraction job (SURVEY.md §2.1, §3.2): the Spark-native
   * re-expression of the reference's worker pool.
   *
-  *   SC1 scan → P1 bucket-salt → J2 resume-anti-join →
-  *   X1 repartition(bucket) → M1 mapPartitions(extract) →
-  *   S1 bucketed write → A1 metrics → S2 lineage append
+  * Each wave (a bucket range) is written in one pass, two stages:
   *
-  * Executed in `waves` (bucket ranges) so a failed wave resumes
-  * idempotently from the lineage table (BASELINE.json:14 "resumable
-  * from checkpoint with per-partition lineage + metrics").
+  *   map:    SC1 scan → P1 bucket-salt → J2 resume-anti-join →
+  *           M1 mapPartitions(extract) → X1 exchange hash(bucket)
+  *   result: A1 per-bucket lineage counts → S1 bucketed write
+  *
+  * then S2 appends the wave's lineage rows as one small file. A run of
+  * one wave is four Spark jobs: the input's schema read, the map stage,
+  * the write, and the lineage append; a resumed run adds its lineage
+  * reads.
+  *
+  * A1 lives in the write's result tasks because Spark applies a result
+  * task's accumulator updates exactly once per partition, and drops
+  * those of failed attempts; map-stage updates are applied again when a
+  * lost shuffle output is recomputed. The counts therefore describe
+  * exactly the rows the committed write holds, without caching the wave
+  * or aggregating it a second time.
+  *
+  * Executed in `waves` so a failed wave resumes idempotently from the
+  * lineage table (BASELINE.json:14 "resumable from checkpoint with
+  * per-partition lineage + metrics").
   */
 object ExtractJob {
 
@@ -30,9 +46,9 @@ object ExtractJob {
       failBucketOnce: Int = -1)
 
   /** Per-partition arena (SURVEY.md §4.3 batch amortization): one
-    * Inflater + the broadcast lookup tables for the whole partition.
+    * Inflater for the whole partition.
     */
-  final class ExtractCtx(tables: BroadcastTables) {
+  final class ExtractCtx {
     private val inflater = new java.util.zip.Inflater()
 
     def extract(row: BucketedRow): ExtractedRow = {
@@ -69,17 +85,22 @@ object ExtractJob {
     }
   }
 
-  /** The broadcast payload (SURVEY.md §2.1 J1): immutable font/encoding
-    * tables shipped to executors once per job.
+  /** bucket → [nDocs, nOk, nErr, bytesIn, charsOut] of one wave, added
+    * to row by row in the write's result tasks (see the header).
     */
-  final case class BroadcastTables(
-      agl: Map[String, String],
-      winAnsi: Array[Int],
-      macRoman: Array[Int],
-      standard: Array[Int])
-
-  def broadcastTables: BroadcastTables =
-    BroadcastTables(Glyphs.agl, Glyphs.winAnsi, Glyphs.macRoman, Glyphs.standard)
+  private final class BucketCounts extends AccumulatorV2[(Int, Array[Long]), Map[Int, Array[Long]]] {
+    private val m = mutable.HashMap.empty[Int, Array[Long]]
+    def add(v: (Int, Array[Long])): Unit = {
+      val a = m.getOrElseUpdate(v._1, new Array[Long](5))
+      for (i <- 0 until 5) a(i) += v._2(i)
+    }
+    def merge(o: AccumulatorV2[(Int, Array[Long]), Map[Int, Array[Long]]]): Unit =
+      o.value.foreach(add)
+    def isZero: Boolean = m.isEmpty
+    def reset(): Unit = m.clear()
+    def copy(): BucketCounts = { val c = new BucketCounts; c.merge(this); c }
+    def value: Map[Int, Array[Long]] = m.toMap
+  }
 
   /** Build the logical plan: scan → prune → bucket → anti-join done →
     * typed extract (MAP-SIDE) → repartition(bucket). Pure (no side
@@ -95,11 +116,16 @@ object ExtractJob {
     * a pure function of (url, payload size) computed before extraction,
     * so the resume anti-join still prunes done buckets without paying
     * for their extraction.
+    *
+    * The exchange hashes on `bucket` into spark.sql.shuffle.partitions
+    * partitions (AQE may coalesce small ones), not one per bucket: every
+    * row of a bucket still lands in one task, so a wave writes one file
+    * per bucket, but the number of write tasks no longer follows the
+    * bucket count, most of which may be empty in a wave.
     */
   def plan(spark: SparkSession, input: DataFrame, doneBuckets: DataFrame,
            spec: Partitioning.BucketSpec, failBucket: Int = -1): Dataset[ExtractedRow] = {
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(broadcastTables)
     // prune BEFORE the typed boundary: column pruning does not reach
     // through mapPartitions (SURVEY.md §4.2)
     val pruned = input
@@ -111,83 +137,70 @@ object ExtractJob {
     todo
       .as[BucketedRow]
       .mapPartitions { it =>
-        val ctx = new ExtractCtx(bc.value)
+        val ctx = new ExtractCtx
         it.map { row =>
           if (failBucket >= 0 && row.bucket == failBucket)
             throw new RuntimeException(s"injected failure for bucket ${row.bucket}")
           ctx.extract(row)
         }
       }
-      .repartition(spec.totalBuckets, col("bucket"))
-      .as[ExtractedRow]
+      .repartition(col("bucket"))
   }
 
   final case class RunReport(attempt: Int, bucketsDone: Seq[Int], nDocs: Long,
                              nOk: Long, nErr: Long)
 
-  /** Execute with resume + lineage. Each wave writes its buckets via
-    * dynamic partition overwrite, then appends `done` lineage rows; a
-    * rerun anti-joins those buckets away.
+  /** Execute with resume + lineage. Each wave runs `plan`, counts its
+    * rows per bucket in the write's result tasks, writes its buckets via
+    * dynamic partition overwrite, then appends one `done` lineage row
+    * per written bucket; a rerun anti-joins those buckets away. A row's
+    * `startedAt..finishedAt` spans its wave's write. Without a lineage
+    * table this is attempt 1 with nothing done, and no lineage query
+    * runs.
     */
   def run(spark: SparkSession, cfg: Config): RunReport = {
     import spark.implicits._
     val input = Tables.read(spark, cfg.inputPath)
 
-    val lineage: DataFrame =
-      if (Tables.exists(spark, cfg.lineagePath)) Tables.read(spark, cfg.lineagePath)
-      else spark.emptyDataset[PartitionLineage].toDF()
-
-    val prevDone = lineage
-      .filter(col("runId") === cfg.runId && col("status") === "done")
-      .select("bucket").distinct()
-    val attempt: Int = {
-      val row = lineage.filter(col("runId") === cfg.runId)
-        .agg(max(col("attempt"))).collect()(0)
-      (if (row.isNullAt(0)) 0 else row.getInt(0)) + 1
-    }
+    val (attempt, prevDone) =
+      if (!Tables.exists(spark, cfg.lineagePath)) (1, null)
+      else {
+        val mine = Tables.read(spark, cfg.lineagePath).filter(col("runId") === cfg.runId)
+        val row = mine.agg(max(col("attempt"))).collect()(0)
+        ((if (row.isNullAt(0)) 0 else row.getInt(0)) + 1,
+          mine.filter(col("status") === "done").select("bucket").distinct())
+      }
     val failBucket = if (cfg.failBucketOnce >= 0 && attempt == 1) cfg.failBucketOnce else -1
 
-    var allBuckets = Seq.empty[Int]
-    var totDocs = 0L
-    var totOk = 0L
-    var totErr = 0L
-    (0 until cfg.waves).foreach { w =>
+    val rows = (0 until cfg.waves).flatMap { w =>
       val waveInput = input.filter(
         pmod(Partitioning.bucketCol(cfg.spec, col("url"), col("html")), lit(cfg.waves)) === w)
-      // Persist the wave across the two actions (write, then A1 metrics
-      // agg) so extraction runs ONCE and the metrics never re-read the
-      // output table — at 100 TB a read-back would be a second full
-      // decode pass over everything just written (VERDICT r1 §wrong-3).
-      // MEMORY_AND_DISK: spilled blocks stay local to the executor that
-      // produced them; strictly cheaper than a parquet round-trip.
-      val extracted = plan(spark, waveInput, prevDone, cfg.spec, failBucket)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        Tables.writeBucketed(extracted.toDF(), cfg.outputPath)
-
-        // A1 metrics from the in-plan wave dataset (cached blocks);
-        // prevDone buckets are already anti-joined out inside plan()
-        val now = System.currentTimeMillis()
-        val stats = extracted.toDF()
-          .groupBy("bucket")
-          .agg(count(lit(1)).as("nDocs"),
-            sum(when(col("error").isNull, 1L).otherwise(0L)).as("nOk"),
-            sum(when(col("error").isNotNull, 1L).otherwise(0L)).as("nErr"),
-            sum(col("bytesIn")).as("bytesIn"),
-            sum(col("charCount")).as("charsOut"))
-          .collect()
-        val rows = stats.map { r =>
-          PartitionLineage(cfg.runId, r.getInt(0), "done", r.getLong(1), r.getLong(2),
-            r.getLong(3), r.getLong(4), r.getLong(5), now, System.currentTimeMillis(), attempt)
-        }.toSeq
-        if (rows.nonEmpty) Tables.append(spark.createDataset(rows).toDF(), cfg.lineagePath)
-        allBuckets ++= rows.map(_.bucket)
-        totDocs += rows.map(_.nDocs).sum
-        totOk += rows.map(_.nOk).sum
-        totErr += rows.map(_.nErr).sum
-      } finally extracted.unpersist(blocking = false)
+      val counts = new BucketCounts
+      spark.sparkContext.register(counts, s"lineage ${cfg.runId} wave $w")
+      // A1: a pass-through of `bucket` after the exchange, so it runs in
+      // the write's result tasks; nondeterministic, so the optimizer
+      // neither moves nor drops it
+      val tally = udf { (bucket: Int, ok: Boolean, bytesIn: Long, charsOut: Int) =>
+        val n = if (ok) 1L else 0L
+        counts.add((bucket, Array(1L, n, 1L - n, bytesIn, charsOut.toLong)))
+        bucket
+      }.asNondeterministic()
+      val counted = plan(spark, waveInput, prevDone, cfg.spec, failBucket).toDF()
+        .withColumn("bucket",
+          tally(col("bucket"), col("error").isNull, col("bytesIn"), col("charCount")))
+      val startedAt = System.currentTimeMillis()
+      Tables.writeBucketed(counted, cfg.outputPath)
+      val finishedAt = System.currentTimeMillis()
+      val waveRows = counts.value.toSeq.sortBy(_._1).map { case (b, c) =>
+        PartitionLineage(cfg.runId, b, "done", c(0), c(1), c(2), c(3), c(4),
+          startedAt, finishedAt, attempt)
+      }
+      if (waveRows.nonEmpty)
+        Tables.append(spark.createDataset(waveRows).toDF().coalesce(1), cfg.lineagePath)
+      waveRows
     }
-    RunReport(attempt, allBuckets, totDocs, totOk, totErr)
+    RunReport(attempt, rows.map(_.bucket), rows.map(_.nDocs).sum, rows.map(_.nOk).sum,
+      rows.map(_.nErr).sum)
   }
 
   /** spark-submit entry point (SURVEY.md §3.2). */
@@ -199,17 +212,8 @@ object ExtractJob {
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
-    // defaultParallelism races executor registration on cluster masters
-    // (returns 2 until workers connect); parse the master string instead
-    val master = spark.sparkContext.master
-    val lc = "local-cluster\\[(\\d+),(\\d+),\\d+\\]".r
-    val l = "local\\[(\\d+)\\]".r
-    val cores = master match {
-      case lc(n, c) => n.toInt * c.toInt
-      case l(n) => n.toInt
-      case _ => math.max(spark.sparkContext.defaultParallelism, 8)
-    }
-    val cfg = Config(runId, in, out, lineagePath, Partitioning.defaultSpec(cores),
+    val spec = Partitioning.defaultSpec(Partitioning.masterCores(spark.sparkContext, 8))
+    val cfg = Config(runId, in, out, lineagePath, spec,
       waves = args.lift(4).map(_.toInt).getOrElse(1))
     val report = run(spark, cfg)
     println(s"run=$runId attempt=${report.attempt} buckets=${report.bucketsDone.size} " +

@@ -16,16 +16,21 @@ final case class PageRow(
     text: String,
     lang: String)
 
-/** A character range [start, end) into `Extracted.text`.
+/** A character range [start, end) into `ExtractedRow.text`.
   * `page`: 0-based PDF page index, or HTML kept-block index.
   * `kind`: "pdf-text" | "html-block" | "html-title".
   */
 final case class Span(start: Int, end: Int, page: Int, kind: String)
 
-/** Output row of the extractor (SURVEY.md §1.3; `bytesIn` added so
-  * lineage metrics aggregate from the output alone, no input re-scan).
+/** Pruned + bucketed input of the typed transform (M1). */
+final case class BucketedRow(bucket: Int, url: String, html: Array[Byte])
+
+/** Output row of the extractor (SURVEY.md §1.3), carrying its bucket
+  * (written partitioned). `bytesIn` lets lineage count input bytes from
+  * output rows, with no input re-scan.
   */
-final case class Extracted(
+final case class ExtractedRow(
+    bucket: Int,
     url: String,
     kind: String, // "pdf" | "html" | "error"
     text: String,
@@ -40,23 +45,6 @@ final case class Extracted(
       * the document extracted fine. Countable like `error`, but the row
       * still carries text (no-silent-caps rule).
       */
-    warn: Option[String] = None)
-
-/** Pruned + bucketed input of the typed transform (M1). */
-final case class BucketedRow(bucket: Int, url: String, html: Array[Byte])
-
-/** Extraction output still carrying its bucket (written partitioned). */
-final case class ExtractedRow(
-    bucket: Int,
-    url: String,
-    kind: String,
-    text: String,
-    spans: Seq[Span],
-    nUnits: Int,
-    charCount: Int,
-    bytesIn: Long,
-    parseMillis: Long,
-    error: Option[String],
     warn: Option[String] = None)
 
 /** Checkpoint/lineage row, appended per completed bucket (SURVEY.md §1.3).

@@ -1,5 +1,6 @@
 package graft.job
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -13,9 +14,7 @@ import org.apache.spark.sql.functions._
   */
 object Partitioning {
 
-  final case class BucketSpec(buckets: Int, bigDocBytes: Long, bigBuckets: Int) {
-    def totalBuckets: Int = buckets + bigBuckets
-  }
+  final case class BucketSpec(buckets: Int, bigDocBytes: Long, bigBuckets: Int)
 
   /** Default local spec: P = 2x cores is plenty at test scale; on a
     * 1000-executor cluster P scales with total cores (SURVEY.md §4.3).
@@ -26,6 +25,21 @@ object Partitioning {
   def defaultSpec(cores: Int): BucketSpec = {
     val p = math.max(cores * 2, 8)
     BucketSpec(buckets = p, bigDocBytes = 1L << 20, bigBuckets = p)
+  }
+
+  /** Total cores of the master: `local[n]` gives n, `local-cluster[n,c,m]`
+    * gives n*c, any other master max(defaultParallelism, floor).
+    * defaultParallelism alone races executor registration on cluster
+    * masters (it returns 2 until the workers connect).
+    */
+  def masterCores(sc: SparkContext, floor: Int): Int = {
+    val localCluster = "local-cluster\\[(\\d+),(\\d+),\\d+\\]".r
+    val local = "local\\[(\\d+)\\]".r
+    sc.master match {
+      case localCluster(n, c) => n.toInt * c.toInt
+      case local(n) => n.toInt
+      case _ => math.max(sc.defaultParallelism, floor)
+    }
   }
 
   /** Bucket column over (url, html). `bigBuckets = 0` disables the

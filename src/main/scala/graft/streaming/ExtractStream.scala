@@ -20,8 +20,8 @@ import graft.job.{ExtractJob, Partitioning}
   * checkpointDir + outDir for new data, and read the combined history
   * with `Tables.readExtracted` (explicit schema → old files surface
   * `warn = null`). Batch-side resume is unaffected: the batch job never
-  * reads its output table back (metrics aggregate from the in-flight
-  * wave), and lineage rows are schema-stable.
+  * reads its output table back (lineage counts come from the write's
+  * own tasks), and lineage rows are schema-stable.
   */
 object ExtractStream {
 
@@ -41,13 +41,12 @@ object ExtractStream {
   def transform(spark: SparkSession, pages: DataFrame,
                 spec: Partitioning.BucketSpec): Dataset[StreamExtracted] = {
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(ExtractJob.broadcastTables)
     pages
       .withColumn("bucket", Partitioning.bucketCol(spec, col("url"), col("html")))
       .select(col("bucket"), col("url"), col("html"), col("warc_ts"))
       .as[StreamIn]
       .mapPartitions { it =>
-        val ctx = new ExtractJob.ExtractCtx(bc.value)
+        val ctx = new ExtractJob.ExtractCtx
         it.map { r =>
           val e = ctx.extract(graft.job.BucketedRow(r.bucket, r.url, r.html))
           StreamExtracted(e.bucket, e.url, e.kind, e.text, e.nUnits,

@@ -82,6 +82,89 @@ class ExtractJobE2ESpec extends AnyFunSuite {
     assert(dupDone == 0, "a bucket must be marked done exactly once")
   }
 
+  /** The corpus with every 5th payload truncated and one byte flipped
+    * (keeps the %PDF- magic), written as a (url, html) table: an input
+    * whose runs produce error rows.
+    */
+  private lazy val corruptedPath: String = {
+    import spark.implicits._
+    val (cp, _) = paths
+    val out = s"${tmpDir()}/corrupted"
+    spark.read.parquet(cp).select("url", "html").as[(String, Array[Byte])].map {
+      case (url, html) =>
+        val id = url.substring(url.lastIndexOf('/') + 1).toLong
+        if (id % 5 == 0 && html.length > 60) {
+          val cut = java.util.Arrays.copyOf(html, html.length / 2)
+          cut(40) = 0x7F.toByte
+          (url, cut)
+        } else (url, html)
+    }.toDF("url", "html").write.parquet(out)
+    out
+  }
+
+  /** Asserts that the `done` lineage rows under `dir` hold, per bucket,
+    * the same counts as an aggregate over the written output table, and
+    * returns those rows.
+    */
+  private def assertLineageMatchesOutput(dir: String): Seq[(Int, Long, Long, Long, Long, Long)] = {
+    import spark.implicits._
+    val lineage = spark.read.parquet(s"$dir/lineage").filter($"status" === "done")
+      .select("bucket", "nDocs", "nOk", "nErr", "bytesIn", "charsOut")
+      .as[(Int, Long, Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
+    val output = spark.read.parquet(s"$dir/out").groupBy("bucket")
+      .agg(count(lit(1)), sum(when($"error".isNull, 1L).otherwise(0L)),
+        sum(when($"error".isNotNull, 1L).otherwise(0L)), sum($"bytesIn"),
+        sum($"charCount").cast("long"))
+      .as[(Int, Long, Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
+    assert(lineage.nonEmpty)
+    assert(lineage == output, s"lineage rows differ from the output table in $dir")
+    lineage
+  }
+
+  test("lineage: each bucket's row equals the same aggregate over the written output") {
+    val spec = Partitioning.BucketSpec(buckets = 8, bigDocBytes = 4L << 20, bigBuckets = 2)
+    // a clean multi-wave run over an input with error rows
+    val cleanDir = tmpDir()
+    val clean = ExtractJob.run(spark, ExtractJob.Config("lin-clean", corruptedPath,
+      s"$cleanDir/out", s"$cleanDir/lineage", spec, waves = 3))
+    assert(clean.attempt == 1, "a fresh run is attempt 1")
+    val cleanRows = assertLineageMatchesOutput(cleanDir)
+    assert(cleanRows.map(_._2).sum == 300 && clean.nDocs == 300)
+    assert(cleanRows.map(_._4).sum > 0 && clean.nErr == cleanRows.map(_._4).sum,
+      "the error rows must be counted")
+    // the injected-failure attempt, then its resumed second attempt
+    val dir = tmpDir()
+    val cfg = ExtractJob.Config("lin-resume", corruptedPath, s"$dir/out", s"$dir/lineage",
+      spec, waves = 4, failBucketOnce = 6)
+    intercept[Exception] { ExtractJob.run(spark, cfg) }
+    val firstRows = assertLineageMatchesOutput(dir)
+    assert(!firstRows.exists(_._1 == 6))
+    assert(ExtractJob.run(spark, cfg).attempt == 2)
+    assert(assertLineageMatchesOutput(dir) == cleanRows)
+  }
+
+  test("lineage: a wave's files were written within its row's [startedAt, finishedAt]") {
+    import spark.implicits._
+    val (cp, _) = paths
+    val dir = tmpDir()
+    val spec = Partitioning.BucketSpec(buckets = 8, bigDocBytes = 4L << 20, bigBuckets = 2)
+    ExtractJob.run(spark, ExtractJob.Config("lin-time", cp, s"$dir/out", s"$dir/lineage",
+      spec, waves = 3))
+    val rows = spark.read.parquet(s"$dir/lineage")
+      .select("bucket", "startedAt", "finishedAt").as[(Int, Long, Long)].collect()
+    assert(rows.map(r => (r._2, r._3)).distinct.length == 3, "one time window per wave")
+    rows.foreach { case (bucket, startedAt, finishedAt) =>
+      val files = new java.io.File(s"$dir/out/bucket=$bucket").listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+      assert(files.length == 1, s"bucket $bucket: one file per bucket per wave")
+      files.foreach { f =>
+        val t = f.lastModified()
+        assert(startedAt <= t && t <= finishedAt,
+          s"bucket $bucket: ${f.getName} modified at $t, outside [$startedAt, $finishedAt]")
+      }
+    }
+  }
+
   test("plan shape: exactly one exchange on the data path, pruned scan") {
     val (cp, _) = paths
     val corpus = spark.read.parquet(cp)
@@ -98,22 +181,7 @@ class ExtractJobE2ESpec extends AnyFunSuite {
   }
 
   test("corrupt payloads become error rows; the job never dies") {
-    import spark.implicits._
-    val (cp, _) = paths
-    val corpus = spark.read.parquet(cp)
-    // corrupt every 5th payload: truncate + flip a byte (keeps %PDF- magic)
-    val corrupted = corpus.map { r =>
-      val url = r.getAs[String]("url")
-      val html = r.getAs[Array[Byte]]("html")
-      val id = url.substring(url.lastIndexOf('/') + 1).toLong
-      val payload =
-        if (id % 5 == 0 && html.length > 60) {
-          val cut = java.util.Arrays.copyOf(html, html.length / 2)
-          cut(40) = 0x7F.toByte
-          cut
-        } else html
-      (url, payload)
-    }.toDF("url", "html")
+    val corrupted = spark.read.parquet(corruptedPath)
     val out = ExtractJob.plan(spark, corrupted, null, Partitioning.defaultSpec(4)).toDF()
     val total = out.count()
     assert(total == 300, "every row must produce an output row")
