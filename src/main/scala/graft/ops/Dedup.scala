@@ -10,44 +10,14 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Default per-(band,sig) bucket cap for the LSH self-joins. The
-    * band-bucket join is quadratic WITHIN a bucket: one hot band key
-    * (template-page near-dup families — exact dups are removed by d1
-    * first, near-dup families are not) funnels O(m²) candidate pairs
-    * through a single reducer, the classic 100-TB scale-killer
-    * (VERDICT r4 "what's wrong" #2). Over-cap buckets are dropped —
-    * observably, via the band-stats queries, never silently. 1024 caps
-    * a bucket's pair count at ~512k (bounded reducer work) while being
-    * far above any honest near-dup family the banding should resolve
-    * pairwise; bigger families belong to clustering, not pair output.
+  /** Default per-(band,sig) bucket cap for the MinHash and SimHash
+    * pair ops (the skew guard itself is documented once, in `Lsh`).
+    * 1024 caps a bucket's pair count at ~512k (bounded reducer work)
+    * while being far above any honest near-dup family the banding
+    * should resolve pairwise; bigger families belong to clustering, not
+    * pair output. Over-cap drops are reported by the band-stats ops.
     */
   val DefaultMaxBandBucket = 1024
-
-  /** Skew guard shared by d2/d3/d6: drop rows of over-cap (band, sig)
-    * buckets before the self-join. The over-cap key list is tiny
-    * (≤ rows/cap keys), so it broadcasts and the bucket relation never
-    * re-shuffles for the guard — same shape as s3's `cosineNearDups`
-    * guard (`Similarity.scala`).
-    */
-  private def capBandBuckets(buckets: DataFrame, maxBandBucket: Int): DataFrame = {
-    val overCap = buckets.groupBy("band", "sig")
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > maxBandBucket)
-      .select("band", "sig")
-    buckets.join(broadcast(overCap), Seq("band", "sig"), "left_anti")
-  }
-
-  /** Per-band bucket statistics for a (doc_id, band, sig) bucket table —
-    * the no-silent-caps observability companion to `capBandBuckets`:
-    * how many buckets/rows the cap drops is a queryable number.
-    */
-  private def bandStats(buckets: DataFrame, maxBandBucket: Int): DataFrame =
-    buckets.groupBy("band", "sig").agg(count(lit(1)).as("n"))
-      .groupBy("band")
-      .agg(count(lit(1)).as("n_buckets"), max("n").as("max_bucket"),
-        sum(when(col("n") > maxBandBucket, 1L).otherwise(0L)).as("n_dropped_buckets"),
-        sum(when(col("n") > maxBandBucket, col("n")).otherwise(lit(0L))).as("n_dropped_rows"))
-      .orderBy("band")
 
   /** Exact dedup: hash-groupBy on content digest. Returns one row per
     * duplicate group with the canonical (min) doc_id and group size.
@@ -72,7 +42,7 @@ object Dedup {
     graft.functions.GraftFunctions.charShingles(text, k)
 
   /** MinHash signatures: H independent permutations approximated by
-    * seeded xxhash64; one hash-aggregate computes all H minima.
+    * seeded xxhash64, all H minima from one per-row kernel pass.
     *
     * `wordGrams = false` (default) shingles CHARACTERS — fine-grained,
     * right for the short-document fixtures and the DuckDB-oracled
@@ -84,204 +54,74 @@ object Dedup {
     */
   def minhash(docs: DataFrame, k: Int = 5, numHashes: Int = 32,
               wordGrams: Boolean = false): DataFrame =
-    minhashSigs(docs, k, numHashes, wordGrams)
+    Lsh.signatures(Lsh.XxHash64(wordGrams), docs, k, numHashes)
       .select(col("doc_id") +:
         (0 until numHashes).map(h => col("sig_arr")(h).as(s"mh_$h")): _*)
-
-  /** (doc_id, sig_arr: array<long>) through the single-pass
-    * `MinHashSig` expression — a pure projection, NO explode, NO
-    * aggregate, NO shuffle (the agg formulation it replaces is kept
-    * bit-identical in DedupSpec's equivalence test). The signature
-    * array is materialized ONCE per row behind a Generate barrier so
-    * downstream multi-references read an attribute instead of
-    * re-evaluating the expression.
-    */
-  private def minhashSigs(docs: DataFrame, k: Int, numHashes: Int,
-                          wordGrams: Boolean): DataFrame =
-    docs.select(col("doc_id"),
-      explode(array(graft.functions.GraftFunctions.minhashSig(
-        col("text"), k, numHashes, wordGrams))).as("sig_arr"))
 
   /** LSH banding: split the signature into `bands`, hash each band,
     * self-join on (band, band_hash) → candidate pairs, then score by
     * signature agreement (estimated Jaccard). Join key is the band
-    * bucket — co-partitioned, no cross join anywhere.
+    * bucket — co-partitioned, no cross join anywhere. Pairs come back
+    * unordered (doc_a < doc_b); a presentation sort belongs to the
+    * caller.
     *
-    * Each bucket row carries the full signature array (~256 B at H=32),
-    * so candidate pairs get both signatures directly from the bucket
-    * join — no join-back to the signature table. The bucket table is
-    * materialized once through the `checkpoint` seam (r7; see the note
-    * at the call below for when a caller should pass `identity`).
+    * The bucket table is materialized once through the `checkpoint`
+    * seam: it feeds THREE consumers — the guard's size aggregate and
+    * both sides of the self-join — and without the cut each consumer
+    * re-runs the whole shingle+signature pipeline (ReuseExchange only
+    * unifies the two identical join sides, not the differently-shaped
+    * size aggregate). Bucket level, not signature level, by
+    * measurement: materializing sigs and re-deriving band keys per
+    * consumer read ~25% slower despite the bands× smaller checkpoint.
+    * The right choice is INPUT-dependent — the bucket table carries the
+    * signature bands× over, so when the input frame is ALREADY
+    * materialized one op upstream, recomputing the (single-pass,
+    * projection-only) signature per consumer beats storing those bytes:
+    * at 231k pipeline docs, `identity` here measured 22.5 s vs 35.6 s
+    * checkpointed (CorpusPipeline passes identity for exactly that
+    * reason). The default serves the standalone case (raw scan
+    * upstream), where the checkpoint wins 2-3×; same seam convention as
+    * nearDupClusters — a cluster caller injects reliable
+    * `_.checkpoint()` or `identity` to match its input.
     */
   def minhashPairs(docs: DataFrame, k: Int = 5, numHashes: Int = 32,
                    bands: Int = 8, minEstJaccard: Double = 0.5,
                    maxBandBucket: Int = DefaultMaxBandBucket,
                    wordGrams: Boolean = false,
-                   checkpoint: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
-    // materialize the bucket table ONCE (r7): it feeds THREE consumers —
-    // the over-cap aggregate and both sides of the self-join — and
-    // without the cut each consumer re-runs the whole shingle+signature
-    // pipeline (ReuseExchange only unifies the two identical join
-    // sides, not the differently-shaped cap aggregate). Bucket level,
-    // not signature level, by measurement: materializing sigs and
-    // re-deriving band keys per consumer read ~25% slower despite the
-    // bands× smaller checkpoint. The right choice is INPUT-dependent —
-    // the bucket table carries the signature bands× over, so when the
-    // input frame is ALREADY materialized one op upstream, recomputing
-    // the (single-pass, projection-only) signature per consumer beats
-    // storing those bytes: at 231k pipeline docs, `identity` here
-    // measured 22.5 s vs 35.6 s checkpointed (CorpusPipeline passes
-    // identity for exactly that reason). Default serves the standalone
-    // case (raw scan upstream), where the checkpoint wins 2-3×; same
-    // seam convention as nearDupClusters — a cluster caller injects
-    // reliable `_.checkpoint()` or `identity` to match its input.
-    val buckets = capBandBuckets(
-      checkpoint(minhashBuckets(docs, k, numHashes, bands, wordGrams)), maxBandBucket)
-    // fraction of matching minhashes ≈ Jaccard (Broder '97); the
-    // equal-position count is the codegen'd LongVecEqCount — the HOF
-    // zip_with/aggregate form was CodegenFallback and dropped the whole
-    // post-join projection to interpreted execution (r7)
-    val est = graft.functions.GraftFunctions.longVecEqCount(
-      col("a.sig_arr"), col("b.sig_arr")).cast("double") / numHashes
-    buckets.as("a")
-      .join(buckets.as("b"), Seq("band", "sig"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        est.as("est_jaccard"))
-      // pairs sharing >1 band dedup here; est is identical per pair
-      .groupBy("doc_a", "doc_b").agg(min(col("est_jaccard")).as("est_jaccard")) // values identical per pair; min is retry-deterministic
-      .filter(col("est_jaccard") >= minEstJaccard)
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
+                   checkpoint: DataFrame => DataFrame = _.localCheckpoint()): DataFrame =
+    Lsh.minhashPairs(Lsh.XxHash64(wordGrams), docs, k, numHashes, bands,
+      minEstJaccard, maxBandBucket, checkpoint)
 
-  /** (doc_id, sig_arr, band, sig) LSH bucket table for the xxhash64
-    * production pipeline — shared by `minhashPairs` and
-    * `minhashBandStats`.
-    */
-  private def minhashBuckets(docs: DataFrame, k: Int, numHashes: Int,
-                             bands: Int, wordGrams: Boolean = false): DataFrame =
-    bucketsOf(minhashSigs(docs, k, numHashes, wordGrams), numHashes, bands)
-
-  /** (doc_id, sig_arr) → (doc_id, sig_arr, band, sig) band-bucket rows.
-    * Band signatures hash the same long values as the former
-    * mh_i-column formulation (sig_arr(i) == mh_i), so bucket keys are
-    * unchanged; sig_arr is an attribute (Generate barrier upstream), so
-    * the element reads below are array loads, not re-evaluations.
-    */
-  private def bucketsOf(sigs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
-    val rows = numHashes / bands
-    val bandCols = (0 until bands).map { b =>
-      val cols = (0 until rows).map(r => col("sig_arr")(b * rows + r))
-      struct(lit(b).as("band"), xxhash64(cols: _*).as("sig"))
-    }
-    sigs
-      .select(col("doc_id"), col("sig_arr"), explode(array(bandCols: _*)).as("bk"))
-      .select(col("doc_id"), col("sig_arr"), col("bk.band").as("band"), col("bk.sig").as("sig"))
-  }
-
-  /** Per-band bucket stats of the production minhash LSH (d2's guard
-    * observability): buckets, max size, and what `maxBandBucket` drops.
+  /** Per-band bucket stats of the production minhash LSH (d8, d2's
+    * guard observability): buckets, max size, and what `maxBandBucket`
+    * drops.
     */
   def minhashBandStats(docs: DataFrame, k: Int = 5, numHashes: Int = 32,
                        bands: Int = 8,
                        maxBandBucket: Int = DefaultMaxBandBucket): DataFrame =
-    bandStats(minhashBuckets(docs, k, numHashes, bands), maxBandBucket)
+    Lsh.bucketStats(Lsh.minhashBuckets(Lsh.XxHash64(), docs, k, numHashes, bands),
+      "band", "sig", maxBandBucket)
 
-  /** Portable-hash minhash + LSH banding (d6): same pipeline shape as
-    * `minhashPairs`, but every hash is md5-derived (the first 15 hex
-    * chars = 60 bits, positive in a BIGINT), so each stage is
-    * expressible in ANSI SQL and the WHOLE banding algorithm runs under
-    * the DuckDB driver oracle (VERDICT r2 next-round #5 — xxhash64
-    * blocked d2 from independent checking). d2 stays the production
-    * path: xxhash64 is codegen'd and ~an order of magnitude cheaper
-    * than md5 per shingle.
+  /** `minhashPairs` on the portable md5 family (d6/d9): the format the
+    * DuckDB oracles check (VERDICT r2 next-round #5 — xxhash64 blocked d2
+    * from independent checking). d2 stays the production path: xxhash64
+    * is codegen'd and ~an order of magnitude cheaper than md5 per
+    * shingle.
     */
   def minhashPairsPortable(docs: DataFrame, k: Int = 5, numHashes: Int = 16,
                            bands: Int = 4, minEstJaccard: Double = 0.5,
-                           maxBandBucket: Int = DefaultMaxBandBucket,
-                           checkpoint: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
-    // same three-consumer bucket materialization + codegen'd
-    // agreement count as minhashPairs (r7)
-    val buckets = capBandBuckets(
-      checkpoint(minhashBucketsPortable(docs, k, numHashes, bands)), maxBandBucket)
-    val est = graft.functions.GraftFunctions.longVecEqCount(
-      col("a.sig_arr"), col("b.sig_arr")).cast("double") / numHashes
-    buckets.as("a")
-      .join(buckets.as("b"), Seq("band", "sig"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        est.as("est_jaccard"))
-      .groupBy("doc_a", "doc_b").agg(min(col("est_jaccard")).as("est_jaccard"))
-      .filter(col("est_jaccard") >= minEstJaccard)
-      .select(col("doc_a"), col("doc_b"), round(col("est_jaccard"), 6).as("est_jaccard"))
-      .orderBy("doc_a", "doc_b")
-  }
+                           maxBandBucket: Int = DefaultMaxBandBucket): DataFrame =
+    Lsh.minhashPairs(Lsh.Md5, docs, k, numHashes, bands, minEstJaccard,
+      maxBandBucket, _.localCheckpoint())
 
-  /** md5-derived bucket table twin of `minhashBuckets` — every stage is
-    * ANSI-expressible, so `minhashBandStatsPortable` runs under the
-    * DuckDB oracle.
-    */
-  private def minhashBucketsPortable(docs: DataFrame, k: Int, numHashes: Int,
-                                     bands: Int): DataFrame =
-    portableBucketsOf(portableSigs(docs, k, numHashes), numHashes, bands)
-
-  /** Whole md5-derived signature in ONE per-row pass via the codegen'd
-    * Md5MinHashSig (r7) — the former explode(shingles) → groupBy →
-    * 16 × min(conv(substr(md5(concat(sh, ':h')),1,15),16,10)) agg
-    * materialized ~text-length rows per document and re-parsed a hex
-    * string per (gram, seed). Values are bit-identical (DedupSpec
-    * equivalence test; the d6/d7/d9 DuckDB oracles gate end-to-end).
-    * The null-text filter mirrors the explode (null grams → no rows);
-    * explode(array(...)) is the Generate barrier so downstream band
-    * references read the signature attribute instead of re-evaluating.
-    */
-  private def portableSigs(docs: DataFrame, k: Int, numHashes: Int): DataFrame =
-    docs.filter(col("text").isNotNull)
-      .transform(parallelismFloor)
-      .select(col("doc_id"),
-        explode(array(graft.functions.GraftFunctions.md5MinhashSig(
-          col("text"), k, numHashes))).as("sig_arr"))
-
-  /** Scale-adaptive parallelism floor for compute-heavy per-row kernels
-    * (guide §2.5, input parallelism): the signature projections run at
-    * input-SPLIT parallelism, so a corpus that is one small file — the
-    * sub-128 MB bench fixture, or any re-read of a compacted tiny
-    * table — serializes the whole hash kernel onto one core while the
-    * rest of the machine idles. When (and only when) the scan exposes
-    * fewer partitions than the session's parallelism, spread rows with
-    * ONE narrow round-robin exchange; at deploy scale input splits ≥
-    * cores and this is a provable no-op (no shuffle added), so it is
-    * NOT a local-mode constant — it derives from the actual input.
-    * Results are partitioning-invariant (every consumer aggregates,
-    * joins or sorts; round-robin repartition is retry-deterministic
-    * via Spark's sort-before-repartition).
-    */
-  private def parallelismFloor(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
-
-  /** md5 band-signature twin of `bucketsOf` (ANSI-expressible keys). */
-  private def portableBucketsOf(sigs: DataFrame, numHashes: Int,
-                                bands: Int): DataFrame = {
-    val rows = numHashes / bands
-    val bandCols = (0 until bands).map { b =>
-      val cols = (0 until rows).map(r => col("sig_arr")(b * rows + r))
-      struct(lit(b).as("band"), md5(concat_ws("|", cols: _*)).as("sig"))
-    }
-    sigs
-      .select(col("doc_id"), col("sig_arr"), explode(array(bandCols: _*)).as("bk"))
-      .select(col("doc_id"), col("sig_arr"), col("bk.band").as("band"), col("bk.sig").as("sig"))
-  }
-
-  /** Per-band bucket stats of the portable minhash LSH — d7: the cap's
-    * observability itself under the DuckDB oracle (md5 banding is
-    * SQL-expressible; the xxhash64 twin `minhashBandStats` is not).
+  /** `minhashBandStats` on the portable md5 family — d7: the cap's
+    * accounting itself under the DuckDB oracle.
     */
   def minhashBandStatsPortable(docs: DataFrame, k: Int = 5, numHashes: Int = 16,
                                bands: Int = 4,
                                maxBandBucket: Int = DefaultMaxBandBucket): DataFrame =
-    bandStats(minhashBucketsPortable(docs, k, numHashes, bands), maxBandBucket)
+    Lsh.bucketStats(Lsh.minhashBuckets(Lsh.Md5, docs, k, numHashes, bands),
+      "band", "sig", maxBandBucket)
 
   /** Connected components over near-dup candidate pairs → one cluster
     * id (the component's MIN doc_id — the canonical document) per
@@ -401,32 +241,27 @@ object Dedup {
 
   /** SimHash near-dup candidates: band the 64 bits into 4×16-bit keys —
     * any pair within Hamming distance 3 shares at least one exact band
-    * (pigeonhole), so the bucket join finds all near-dups.
+    * (pigeonhole), so the bucket join finds all near-dups. Pairs come
+    * back unordered (doc_a < doc_b).
     */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
-                   maxBandBucket: Int = DefaultMaxBandBucket,
-                   checkpoint: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
-    val sh = simhash(docs)
+                   maxBandBucket: Int = DefaultMaxBandBucket): DataFrame = {
     val bandCols = (0 until 4).map(b =>
       struct(lit(b).as("band"),
         shiftrightunsigned(col("simhash"), b * 16).bitwiseAND(0xFFFFL).as("sig")))
-    // one materialization for the cap aggregate + both join sides (r7,
-    // the minhashPairs rationale)
-    val buckets = capBandBuckets(
-      checkpoint(
-        sh.select(col("doc_id"), col("simhash"), explode(array(bandCols: _*)).as("bk"))
-          .select(col("doc_id"), col("simhash"), col("bk.band").as("band"), col("bk.sig").as("sig"))),
-      maxBandBucket)
-    val pairs = buckets.as("a").join(buckets.as("b"), Seq("band", "sig"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
+    // one materialization for the guard's size aggregate + both join
+    // sides (the minhashPairs rationale)
+    val buckets = simhash(docs)
+      .select(col("doc_id"), col("simhash"), explode(array(bandCols: _*)).as("bk"))
+      .select(col("doc_id"), col("simhash"), col("bk.band").as("band"), col("bk.sig").as("sig"))
+      .localCheckpoint()
+    Lsh.cappedSelfJoin(buckets, Seq("band", "sig"), "doc_id", maxBandBucket)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         col("a.simhash").as("sh_a"), col("b.simhash").as("sh_b"))
       .distinct()
-    pairs
       .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
       .filter(col("hamming") <= maxHamming)
       .select("doc_a", "doc_b", "hamming")
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** Word n-gram Jaccard, exact, computed only for candidate pairs

@@ -328,13 +328,12 @@ object Similarity {
     topKPerQuery(scored, k)
   }
 
-  /** Embedding-cosine near-duplicate pairs over multi-table LSH buckets.
-    * Within-bucket all-pairs is bounded two ways: 16 planes/table keep
-    * expected buckets tiny, and `maxBucket` drops degenerate skew
-    * buckets outright (a skewed bucket of m rows is an O(m²) bomb at
-    * corpus scale); dropped buckets are observable via the returned
-    * plan's bucket-size filter. Exact-direction duplicates (cos = 1)
-    * agree on every table, so the drop only risks borderline pairs.
+  /** Embedding-cosine near-duplicate pairs over multi-table LSH buckets,
+    * unordered (vec_a < vec_b). Within-bucket all-pairs is bounded two
+    * ways: 16 planes/table keep expected buckets tiny, and `maxBucket`
+    * is the `Lsh` skew guard on (tbl, key) buckets, its drops reported
+    * by `lshBucketStats`. Exact-direction duplicates (cos = 1) agree on
+    * every table, so the drop only risks borderline pairs.
     */
   def cosineNearDups(corpus: DataFrame, dim: Int, minCos: Double = 0.95,
                      planes: Int = NearDupPlanes, tables: Int = NearDupTables,
@@ -344,40 +343,24 @@ object Similarity {
     val cb = corpus.select(col("vec_id"), col("embedding"),
       norm(col("embedding")).as("nrm"),
       posexplode(lshKeysArr(col("embedding"), dim, planes, tables)).as(Seq("tbl", "key")))
-    // skew guard: the over-cap key list is TINY (≤ tables × corpus/maxBucket
-    // rows), so broadcast it and anti-join — the wide (vec_id, embedding)
-    // relation never shuffles for the guard. Joining the sizes aggregate
-    // back onto cb (r2) dragged the embeddings through a second exchange
-    // (VERDICT r2 "what's wrong" #2).
-    val overCap = cb.groupBy("tbl", "key").agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > maxBucket)
-      .select("tbl", "key")
-    val bounded = cb.join(broadcast(overCap), Seq("tbl", "key"), "left_anti")
-    bounded.as("a").join(bounded.as("b"), Seq("tbl", "key"))
-      .filter(col("a.vec_id") < col("b.vec_id"))
+    Lsh.cappedSelfJoin(cb, Seq("tbl", "key"), "vec_id", maxBucket)
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
         (dot(col("a.embedding"), col("b.embedding")) /
           (col("a.nrm") * col("b.nrm") + lit(1e-12))).as("cos"))
       .filter(col("cos") >= minCos)
       .groupBy("vec_a", "vec_b").agg(min(col("cos")).as("cos")) // cross-table dedup (identical values; min is retry-deterministic)
-      .orderBy(col("vec_a"), col("vec_b"))
   }
 
-  /** Per-table LSH bucket statistics — the observability companion to
-    * `cosineNearDups`'s `maxBucket` skew guard: how many buckets (and
-    * corpus rows) the cap would drop is never silent, it's a queryable
-    * number (the no-silent-caps rule).
+  /** Per-table LSH bucket statistics of `cosineNearDups` (s6): how many
+    * buckets (and corpus rows) its `maxBucket` guard drops is never
+    * silent, it's a queryable number (the no-silent-caps rule).
     */
   def lshBucketStats(corpus: DataFrame, dim: Int, planes: Int = NearDupPlanes,
                      tables: Int = NearDupTables,
                      maxBucket: Int = NearDupMaxBucket): DataFrame =
-    corpus.select(posexplode(lshKeysArr(col("embedding"), dim, planes, tables)).as(Seq("tbl", "key")))
-      .groupBy("tbl", "key").agg(count(lit(1)).as("n"))
-      .groupBy("tbl")
-      .agg(count(lit(1)).as("n_buckets"), max("n").as("max_bucket"),
-        sum(when(col("n") > maxBucket, 1L).otherwise(0L)).as("n_dropped_buckets"),
-        sum(when(col("n") > maxBucket, col("n")).otherwise(lit(0L))).as("n_dropped_rows"))
-      .orderBy("tbl")
+    Lsh.bucketStats(corpus.select(
+      posexplode(lshKeysArr(col("embedding"), dim, planes, tables)).as(Seq("tbl", "key"))),
+      "tbl", "key", maxBucket)
 
   /** Recall@k of `method` against `truth` (both (query_id, vec_id)
     * top-k tables): |method ∩ truth| / |truth|, as a 1-row DataFrame.
@@ -396,6 +379,30 @@ object Similarity {
   // as the equivalence-test twin inlined in SimilaritySpec — the live
   // portable path is `pairCosPrenormedAB` below, bit-identical to it.
 
+  /** Within-cell candidate pairs (id_a < id_b, cosine ≥ minCos) over a
+    * cell-assigned corpus — the shared edge builder for the SemDeDup
+    * prune and semantic clustering (s9). A vector lives in exactly one
+    * cell, so no cross-cell dedup is needed.
+    */
+  private def cellPairs(assigned: DataFrame, minCos: Double, maxCell: Int,
+                        cos: (Column, Column) => Column,
+                        idCol: String): DataFrame = {
+    // NaN GUARD — load-bearing, found by the degenerate-embedding
+    // test: Spark SQL orders NaN ABOVE every value, so a bare
+    // `cos >= minCos` is TRUE when an embedding contains NaN — one
+    // poisoned vector would silently drop every higher-id member of
+    // its cell. Non-finite cosines are excluded outright (the
+    // topKPerQuery convention): degenerate embeddings pair with
+    // nothing and are always KEPT.
+    val cv = cos(col("a.embedding"), col("b.embedding"))
+    // the join keeps ALL of assigned's columns (r7): the portable path
+    // carries a precomputed per-row norm so the pair filter pays one dot
+    // per pair, not three
+    Lsh.cappedSelfJoin(assigned, Seq("cell"), idCol, maxCell)
+      .filter(!isnan(cv) && cv =!= lit(Double.PositiveInfinity) && cv >= minCos)
+      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
+  }
+
   /** Shared SemDeDup prune over a cell-assigned corpus
     * (vec_id, embedding, cell): drop every vector that has a LOWER-id
     * neighbor in the same cell at cosine ≥ minCos; emit
@@ -409,41 +416,10 @@ object Similarity {
     * (A~B~C, A≁C) drop C here but keep it under the greedy sweep —
     * the conservative direction for a dedup (never keeps a duplicate).
     *
-    * Skew guard mirrors `cosineNearDups`: a degenerate cell of m rows
-    * is an O(m²) bomb, so over-cap cells opt OUT of pairing and their
-    * members are all KEPT — a cap must drop candidate PAIRS, never
-    * silently delete documents. The over-cap list is tiny (≤
-    * corpus/maxCell rows), broadcast into a left_anti so the wide
-    * embedding relation never shuffles for the guard.
+    * Skew guard: the `Lsh` guard on cells — over-cap cells opt OUT of
+    * pairing and their members are all KEPT (a cap drops candidate
+    * PAIRS, never documents).
     */
-  /** Within-cell candidate pairs (id_a < id_b, cosine ≥ minCos) over a
-    * cell-assigned corpus — the shared edge builder for the SemDeDup
-    * prune and semantic clustering (s9). A vector lives in exactly one
-    * cell, so no cross-cell dedup is needed.
-    */
-  private def cellPairs(assigned: DataFrame, minCos: Double, maxCell: Int,
-                        cos: (Column, Column) => Column,
-                        idCol: String): DataFrame = {
-    val overCap = assigned.groupBy("cell").agg(count(lit(1)).as("cell_n"))
-      .filter(col("cell_n") > maxCell).select("cell")
-    // keep ALL of assigned's columns (r7): the portable path carries a
-    // precomputed per-row norm so the pair filter pays one dot per
-    // pair, not three
-    val bounded = assigned.join(broadcast(overCap), Seq("cell"), "left_anti")
-    // NaN GUARD — load-bearing, found by the degenerate-embedding
-    // test: Spark SQL orders NaN ABOVE every value, so a bare
-    // `cos >= minCos` is TRUE when an embedding contains NaN — one
-    // poisoned vector would silently drop every higher-id member of
-    // its cell. Non-finite cosines are excluded outright (the
-    // topKPerQuery convention): degenerate embeddings pair with
-    // nothing and are always KEPT.
-    val cv = cos(col("a.embedding"), col("b.embedding"))
-    bounded.as("a").join(bounded.as("b"), Seq("cell"))
-      .filter(col(s"a.$idCol") < col(s"b.$idCol"))
-      .filter(!isnan(cv) && cv =!= lit(Double.PositiveInfinity) && cv >= minCos)
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
-  }
-
   private def semDedupPrune(assigned: DataFrame, minCos: Double, maxCell: Int,
                             cos: (Column, Column) => Column,
                             idCol: String): DataFrame = {
@@ -485,9 +461,9 @@ object Similarity {
     *
     * CONTRACT (hence the AB suffix): beyond its (embA, embB) column
     * parameters it reads the `nrm` columns through the FIXED dataframe
-    * aliases `a`/`b` that `cellPairs` establishes — it is valid ONLY
-    * as a `cellPairs` cos callback over a `portableAssigned` input,
-    * never as a free-standing column builder.
+    * aliases `a`/`b` that `Lsh.cappedSelfJoin` establishes — it is
+    * valid ONLY as a `cellPairs` cos callback over a `portableAssigned`
+    * input, never as a free-standing column builder.
     */
   private def pairCosPrenormedAB(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.dvdot(a, b) /

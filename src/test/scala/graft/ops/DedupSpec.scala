@@ -226,11 +226,13 @@ class DedupSpec extends AnyFunSuite {
     // buckets — the cap only fires on degenerate collisions.)
     val body = (1 to 80).map(i => s"tmpl$i").mkString(" ")
     val family = (0 until 400).map(i => (1000L + i) -> body)
-    // plus an honest small near-dup pair far from the family
+    // plus an honest small near-dup pair far from the family, and one
+    // null-text row: null text yields no bucket row (hence no pair)
+    // under either signature spec
     val honest = Seq(
       1L -> "alpha beta gamma delta epsilon zeta eta theta",
       2L -> "alpha beta gamma delta epsilon zeta eta iota")
-    val d = docs((honest ++ family): _*)
+    val d = docs((honest ++ family :+ (7L -> null)): _*)
 
     val capped = Dedup.minhashPairs(d, minEstJaccard = 0.0, maxBandBucket = 100)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -245,6 +247,20 @@ class DedupSpec extends AnyFunSuite {
     val droppedRows = stats.map(_.getLong(4)).sum
     assert(dropped >= 1, "at least one over-cap bucket expected")
     assert(droppedRows >= 400, s"family rows must be accounted: $droppedRows")
+    // exactly: in every band the family is the one dropped bucket, all
+    // 400 of its rows — for both specs (8 xxhash64 bands, 4 md5 bands)
+    def perBand(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(r => (r.getInt(0), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
+    assert(perBand(stats) == (0 until 8).map(b => (b, 400L, 1L, 400L)), perBand(stats))
+    val statsPortable = Dedup.minhashBandStatsPortable(d, maxBandBucket = 100).collect()
+    assert(perBand(statsPortable) == (0 until 4).map(b => (b, 400L, 1L, 400L)),
+      perBand(statsPortable))
+    Seq(Lsh.XxHash64() -> 32, Lsh.Md5 -> 16).foreach { case (spec, h) =>
+      val nullRows = Lsh.minhashBuckets(spec, d, 5, h, h / 4)
+        .filter(col("doc_id") === 7L).count()
+      assert(nullRows == 0, s"$spec: null text produced $nullRows bucket rows")
+    }
+    assert(!capped.exists { case (a, b) => a == 7L || b == 7L }, "null text paired")
     // and the family is NOT lost to dedup — d1-style exact/clustering
     // handles identical-signature families; the cap only bounds the
     // pairwise path. Same guard on the portable twin:
@@ -253,6 +269,7 @@ class DedupSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cappedPortable.contains((1L, 2L)))
     assert(!cappedPortable.exists { case (a, b) => a >= 1000L && b >= 1000L })
+    assert(!cappedPortable.exists { case (a, b) => a == 7L || b == 7L }, "null text paired")
   }
 
   test("nearDupClusters: chained pairs merge transitively, min id is canonical") {

@@ -169,6 +169,38 @@ class SimilaritySpec extends AnyFunSuite {
     assert(expected.subsetOf(pairs), s"missing planted dups: ${expected -- pairs}")
   }
 
+  test("cosineNearDups skew guard: an over-cap same-direction family is dropped and counted, honest dups survive") {
+    val corpus = clustered(5, 20, 0.3)
+    // one honest duplicate: a 2x copy of vector 0 (cos = 1)
+    val honest = corpus.filter(col("vec_id") === 0L)
+      .select(lit(100000L).as("vec_id"),
+        transform(col("embedding"), x => x * 2.0f).as("embedding"))
+    // a degenerate family: 60 copies of one direction at power-of-two
+    // scales (exact in float, so every plane sign — hence every table's
+    // key — is identical), i.e. one 60-row bucket per table
+    val rng = new scala.util.Random(99L)
+    val w = Seq.fill(dim)(rng.nextGaussian().toFloat)
+    val familyIds = (0 until 60).map(500000L + _)
+    val family = spark.createDataFrame(familyIds.zipWithIndex.map { case (id, i) =>
+      (id, w.map(_ * math.pow(2, i % 20 - 10).toFloat))
+    }).toDF("vec_id", "embedding")
+    val all = corpus.unionByName(honest).unionByName(family)
+    val cap = 50
+    val pairs = Similarity.cosineNearDups(all, dim, maxBucket = cap)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs.contains((0L, 100000L)), s"honest pair lost: $pairs")
+    assert(!pairs.exists { case (a, b) => a >= 500000L || b >= 500000L },
+      s"over-cap family paired: ${pairs.filter(_._2 >= 500000L).take(5)}")
+    // the drop is accounted per table: the family's rows are among the
+    // dropped rows of every table
+    val stats = Similarity.lshBucketStats(all, dim, maxBucket = cap).collect()
+    assert(stats.length == Similarity.NearDupTables)
+    stats.foreach { r =>
+      assert(r.getLong(3) >= 1L && r.getLong(4) >= familyIds.size.toLong,
+        s"table ${r.getInt(0)}: dropped ${r.getLong(3)} buckets / ${r.getLong(4)} rows")
+    }
+  }
+
   test("no ANN plan contains a window exchange (scale-safe top-k)") {
     val corpus = clustered(8, 25, 0.3)
     val queries = corpus.orderBy("vec_id").limit(3)
