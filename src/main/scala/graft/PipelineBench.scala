@@ -34,9 +34,9 @@ object PipelineBench {
     val corpus = graft.io.Tables.read(spark, cp)
     val spec = graft.job.Partitioning.defaultSpec(cpus.toInt)
 
-    def extractOnce() = graft.job.ExtractJob.plan(spark, corpus, null, spec).toDF()
-      .filter(col("error").isNull).select(col("url"), col("text"))
-      .localCheckpoint()
+    def extractOnce() = graft.ops.Lineage.cut(
+      graft.job.ExtractJob.plan(spark, corpus, null, spec).toDF()
+        .filter(col("error").isNull).select(col("url"), col("text")))
 
     // untimed warm-up extraction (JIT + page cache), then the timed run
     extractOnce().count()
@@ -71,13 +71,13 @@ object PipelineBench {
       graft.job.CorpusPipeline.plantRepublications(ext),
       boilerplateLineMinDocs = if (full) Some(100) else None,
       maxDocsPerHost = if (full) Some(1000) else None,
-      // MATERIALIZED (localCheckpoint), not fed as a lazy projection:
+      // MATERIALIZED (a lineage cut), not fed as a lazy projection:
       // the 64-hash synthesis expression would otherwise be inlined
       // into every one of the ~200 centroid-distance expressions by
       // projection collapse — a plan so large per-task codegen OOMs.
       // Real deployments hit the same rule: embeddings arrive as a
       // TABLE from the embedding model, never as an inline formula.
-      semDedupEmbeddings = if (sem) Some(semEmb(ext).localCheckpoint()) else None,
+      semDedupEmbeddings = if (sem) Some(graft.ops.Lineage.cut(semEmb(ext))) else None,
       // cell population ≈ corpus/nCells must stay under the cap for
       // the stage to do work, and pair cost is O(cell²) — size cells
       // to ~250 expected members (the 100 TB sizing rule, exercised

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.gen.CorpusTables
 import graft.job.{ExtractJob, Partitioning}
-import graft.ops.{Dedup, Pii, Sampling, Similarity, TextAnalysis, Urls}
+import graft.ops.{Dedup, Lineage, Pii, Sampling, Similarity, TextAnalysis, Urls}
 
 /** Driver contract (SURVEY.md §3.3): flagship entry + one query per
   * operator, with DuckDB-oracle SQL where ANSI-expressible.
@@ -149,9 +149,8 @@ object SparkEntry {
       // materialize extraction ONCE: the plant slices below are three
       // more consumers of this plan, and without the cut each union
       // branch re-runs the whole extraction (the d9 lineage lesson)
-      val ext = extractSmall(s).filter(col("error").isNull)
-        .select(col("url"), col("text"))
-        .localCheckpoint()
+      val ext = Lineage.cut(extractSmall(s).filter(col("error").isNull)
+        .select(col("url"), col("text")))
       val res = graft.job.CorpusPipeline.run(
         graft.job.CorpusPipeline.plantRepublications(ext))
       res.stages.orderBy("stage")
@@ -513,7 +512,8 @@ object SparkEntry {
     // transitive closure (the chaining A~B~C case pairs can't answer)
     "d9_neardup_clusters" -> ((s, dir) =>
       Dedup.nearDupClusters(
-        Dedup.minhashPairsPortable(docsWithDups(s, dir).filter(col("doc_id") % 4 === 0)))),
+        Dedup.minhashPairsPortable(docsWithDups(s, dir).filter(col("doc_id") % 4 === 0)))
+        .orderBy("doc_id")),
     "s1_ann_brute" -> ((s, dir) => {
       val emb = embeddings(s, dir)
       val q = emb.orderBy("vec_id").limit(5)

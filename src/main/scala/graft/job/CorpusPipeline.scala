@@ -2,7 +2,7 @@ package graft.job
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.{Dedup, Pii, Sampling, Similarity, TextAnalysis, Urls}
+import graft.ops.{Dedup, Lineage, Pii, Sampling, Similarity, TextAnalysis, Urls}
 
 /** The composed LLM-training-data flagship (VERDICT r5 "next" #1):
   * extraction output → URL canonicalization → exact text dedup →
@@ -12,16 +12,19 @@ import graft.ops.{Dedup, Pii, Sampling, Similarity, TextAnalysis, Urls}
   * and composition is exactly where partitioning and lineage mistakes
   * hide (the d9 lazy-cache lesson: an iterative stage whose input plan
   * re-embeds three upstream stages re-executes them every round).
-  * Hence the same `checkpoint` seam as `nearDupClusters`: every stage
-  * boundary is materialized once; stage counts are scalar actions over
-  * the materialized frames (no data to the driver). Cluster callers
-  * inject reliable `_.checkpoint()`.
+  * Hence every stage boundary is materialized once, by the library's
+  * one lineage-cut rule (`Lineage.cut`: reliable when the session has a
+  * checkpoint directory — set one on a cluster — executor-local
+  * otherwise); stage counts are scalar actions over the materialized
+  * frames (no data to the driver).
   *
-  * Scale shape: each stage is one hash-aggregate or equi-join on a
-  * key — `min_by` aggregates pick the canonical row without any window
-  * exchange; the LSH stage carries `maxBandBucket` skew caps; the
-  * final anti-join shuffles on url (AQE decides the strategy from the
-  * loser side's runtime size).
+  * Scale shape: each stage is one aggregate or equi-join on a key —
+  * `min_by` aggregates pick the canonical row without any window
+  * exchange (sort-based: min_by's string buffer rules out hash
+  * aggregation, so each reducer sorts its own partition); the LSH
+  * stage carries `maxBandBucket` skew caps; the final anti-join
+  * shuffles on url (AQE decides the strategy from the loser side's
+  * runtime size).
   */
 object CorpusPipeline {
 
@@ -140,12 +143,11 @@ object CorpusPipeline {
           sampleByLang: Option[Map[String, Double]] = None,
           semDedupEmbeddings: Option[DataFrame] = None,
           semDedupMinCos: Double = 0.92,
-          semDedupCells: Int = 16, semDedupMaxCell: Int = 10000,
-          checkpoint: DataFrame => DataFrame = _.localCheckpoint()): Result = {
+          semDedupCells: Int = 16, semDedupMaxCell: Int = 10000): Result = {
     val spark = extracted.sparkSession
 
     val input0 = extracted.select(col("url"), col("text")).filter(col("text").isNotNull)
-    val input = checkpoint(
+    val input = Lineage.cut(
       if (repairMojibake)
         input0.withColumn("text",
           graft.functions.GraftFunctions.fixMojibake(col("text")))
@@ -159,26 +161,26 @@ object CorpusPipeline {
       if (maxDupLineFrac >= 1.0) lit(true)
       else graft.functions.GraftFunctions.repStats(col("text"))
         .getItem(0) <= maxDupLineFrac
-    val gated0 = checkpoint(input.filter(passQuality && passRepetition))
+    val gated0 = Lineage.cut(input.filter(passQuality && passRepetition))
 
     // opt-in d10: strip corpus-frequent lines BEFORE dedup so banner-
     // only differences collapse in the exact stage
     val gated = boilerplateLineMinDocs match {
       case Some(m) =>
-        checkpoint(Dedup.dropBoilerplateLines(gated0, m, idCol = "url"))
+        Lineage.cut(Dedup.dropBoilerplateLines(gated0, m, idCol = "url"))
       case None => gated0
     }
 
     // one row per canonical URL (tracking params / case / ports / %enc
     // collapse); min_by picks the lexicographically-first raw url as
-    // the canonical carrier — a hash-agg, not a window
-    val byUrl = checkpoint(
+    // the canonical carrier — an aggregate, not a window
+    val byUrl = Lineage.cut(
       gated.groupBy(Urls.canonicalize(col("url")).as("url_canon"))
         .agg(min_by(struct(col("url"), col("text")), col("url")).as("r"))
         .select(col("r.url").as("url"), col("r.text").as("text")))
 
     // exact content dedup on the text digest
-    val byText = checkpoint(
+    val byText = Lineage.cut(
       byUrl.groupBy(md5(col("text")).as("content_hash"))
         .agg(min_by(struct(col("url"), col("text")), col("url")).as("r"))
         .select(col("r.url").as("url"), col("r.text").as("text")))
@@ -201,10 +203,10 @@ object CorpusPipeline {
       k, numHashes, bands, minEstJaccard, maxBandBucket, wordGrams = true,
       checkpoint = identity)
     val (labels, converged, rounds) =
-      Dedup.nearDupClustersStatus(pairs, maxIter, checkpoint)
+      Dedup.nearDupClustersStatus(pairs, maxIter)
     val losers = labels.filter(col("doc_id") =!= col("cluster_id"))
       .select(col("doc_id").as("url"))
-    val deduped = checkpoint(byText.join(losers, Seq("url"), "left_anti"))
+    val deduped = Lineage.cut(byText.join(losers, Seq("url"), "left_anti"))
     // opt-in s7: SEMANTIC dedup over the lexical survivors — docs
     // without an embedding row never enter the prune (inner join),
     // so they are kept unconditionally
@@ -228,7 +230,7 @@ object CorpusPipeline {
                 minCos = semDedupMinCos, nCells = semDedupCells,
                 maxCell = semDedupMaxCell, idCol = "url")
               .filter(!col("kept")).select("url")
-            checkpoint(deduped.join(drops, Seq("url"), "left_anti"))
+            Lineage.cut(deduped.join(drops, Seq("url"), "left_anti"))
           case None => deduped // no survivor has an embedding
         }
       case None => deduped
@@ -237,7 +239,7 @@ object CorpusPipeline {
     // against a host); xxhash64 rank — deterministic, no window
     val keptRaw = maxDocsPerHost match {
       case Some(cap) =>
-        checkpoint(Urls.capPerDomain(semDeduped, cap, rank = Urls.xxRank))
+        Lineage.cut(Urls.capPerDomain(semDeduped, cap, rank = Urls.xxRank))
       case None => semDeduped
     }
     // opt-in d12: eval-set decontamination over the survivors — the
@@ -248,14 +250,14 @@ object CorpusPipeline {
           keptRaw.select(col("url").as("doc_id"), col("text")), bench, decontamN)
           .filter(col("contam_frac") > maxContamFrac)
           .select(col("doc_id").as("url"))
-        checkpoint(keptRaw.join(bad, Seq("url"), "left_anti"))
+        Lineage.cut(keptRaw.join(bad, Seq("url"), "left_anti"))
       case None => keptRaw
     }
     // opt-in q24: per-language mixing rates over the final set — a
     // pure deterministic filter (langid + xxhash64 rank, both codegen'd)
     val sampled = sampleByLang match {
       case Some(rates) =>
-        checkpoint(Sampling.stratifiedSample(
+        Lineage.cut(Sampling.stratifiedSample(
           decontamed.withColumn("lang",
             graft.functions.GraftFunctions.langid(col("text"))),
           rates, strataCol = "lang", keyCol = "url", rank = Urls.xxRank)

@@ -79,16 +79,16 @@ object Dedup {
     * projection-only) signature per consumer beats storing those bytes:
     * at 231k pipeline docs, `identity` here measured 22.5 s vs 35.6 s
     * checkpointed (CorpusPipeline passes identity for exactly that
-    * reason). The default serves the standalone case (raw scan
-    * upstream), where the checkpoint wins 2-3×; same seam convention as
-    * nearDupClusters — a cluster caller injects reliable
-    * `_.checkpoint()` or `identity` to match its input.
+    * reason). The default, `Lineage.cut`, serves the standalone case
+    * (raw scan upstream), where the cut wins 2-3×. This is the only
+    * seam left that a caller may set to `identity`: a bucket table cut
+    * is an optimization, never a lineage bound (nothing iterates here).
     */
   def minhashPairs(docs: DataFrame, k: Int = 5, numHashes: Int = 32,
                    bands: Int = 8, minEstJaccard: Double = 0.5,
                    maxBandBucket: Int = DefaultMaxBandBucket,
                    wordGrams: Boolean = false,
-                   checkpoint: DataFrame => DataFrame = _.localCheckpoint()): DataFrame =
+                   checkpoint: DataFrame => DataFrame = Lineage.cut): DataFrame =
     Lsh.minhashPairs(Lsh.XxHash64(wordGrams), docs, k, numHashes, bands,
       minEstJaccard, maxBandBucket, checkpoint)
 
@@ -112,7 +112,7 @@ object Dedup {
                            bands: Int = 4, minEstJaccard: Double = 0.5,
                            maxBandBucket: Int = DefaultMaxBandBucket): DataFrame =
     Lsh.minhashPairs(Lsh.Md5, docs, k, numHashes, bands, minEstJaccard,
-      maxBandBucket, _.localCheckpoint())
+      maxBandBucket, Lineage.cut)
 
   /** `minhashBandStats` on the portable md5 family — d7: the cap's
     * accounting itself under the DuckDB oracle.
@@ -138,9 +138,8 @@ object Dedup {
     * scalar only — no data to the driver). Rows whose doc never pairs
     * are absent (singleton = its own cluster, derivable by left join).
     */
-  def nearDupClusters(pairs: DataFrame, maxIter: Int = 10,
-                      checkpoint: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
-    val (labels, converged, rounds) = nearDupClustersStatus(pairs, maxIter, checkpoint)
+  def nearDupClusters(pairs: DataFrame, maxIter: Int = 10): DataFrame = {
+    val (labels, converged, rounds) = nearDupClustersStatus(pairs, maxIter)
     if (!converged)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"nearDupClusters: min-label propagation did NOT converge within $maxIter " +
@@ -154,27 +153,25 @@ object Dedup {
     * component's diameter exceeded `maxIter` (chained LSH pairs) and
     * labels are only partially merged — callers that must not accept
     * that gate on `converged` instead of trusting a log line
-    * (ADVICE r5 low: never silent).
+    * (ADVICE r5 low: never silent). Labels come back unordered; a
+    * presentation sort belongs to the caller.
     *
-    * `checkpoint` is the lineage-cut seam: an iterative algorithm must
-    * materialize every round or round i's plan re-embeds (and re-runs
-    * pieces of) all earlier rounds plus the upstream LSH pipeline —
-    * lazy .cache() raced its own first materialization inside
-    * multi-branch actions and the bench paid the minhash pipeline ~30x
-    * (117-174 s at sf0.1; ~3 s checkpointed). The default
-    * `localCheckpoint()` is executor-local (fast, NOT fault-tolerant —
-    * fine in local mode); a cluster caller injects reliable
-    * `_.checkpoint()` (HDFS-backed, survives executor loss) via this
-    * parameter (VERDICT r5 "wrong" #2).
+    * The edge set and every round are cut by `Lineage.cut`, with no
+    * caller override: an iterative algorithm must materialize every
+    * round or round i's plan re-embeds (and re-runs pieces of) all
+    * earlier rounds plus the upstream LSH pipeline — lazy .cache()
+    * raced its own first materialization inside multi-branch actions
+    * and the bench paid the minhash pipeline ~30x (117-174 s at sf0.1;
+    * ~3 s checkpointed). The labels' plan is therefore the same size
+    * after any number of rounds.
     */
-  def nearDupClustersStatus(pairs: DataFrame, maxIter: Int = 10,
-                            checkpoint: DataFrame => DataFrame = _.localCheckpoint())
+  def nearDupClustersStatus(pairs: DataFrame, maxIter: Int = 10)
   : (DataFrame, Boolean, Int) = {
     // symmetrize in ONE pass over `pairs` (r7): the former two-select
     // union evaluated the whole upstream pair pipeline twice before the
     // first checkpoint could cut it — for d9/s9 that is the entire LSH /
     // semantic-pair stage, the most expensive subtree of the query
-    val edges = checkpoint(
+    val edges = Lineage.cut(
       pairs.select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
@@ -195,7 +192,7 @@ object Dedup {
       // the changed flag rides on the checkpointed frame (r7): a label
       // shrank iff a strictly smaller neighbor min arrived — the former
       // separate next⋈labels count paid one more join per round
-      val next = checkpoint(
+      val next = Lineage.cut(
         labels.join(nbrMin, labels("doc_id") === nbrMin("src"), "left")
           .select(col("doc_id"),
             least(col("cluster_id"), coalesce(col("nbr_min"), col("cluster_id"))).as("cluster_id"),
@@ -204,7 +201,7 @@ object Dedup {
       labels = next.select("doc_id", "cluster_id")
       i += 1
     }
-    (labels.orderBy("doc_id"), changed == 0L, i)
+    (labels, changed == 0L, i)
   }
 
   /** SimHash (64-bit): per-token hash, bitwise weighted majority — ONE
@@ -251,10 +248,9 @@ object Dedup {
         shiftrightunsigned(col("simhash"), b * 16).bitwiseAND(0xFFFFL).as("sig")))
     // one materialization for the guard's size aggregate + both join
     // sides (the minhashPairs rationale)
-    val buckets = simhash(docs)
+    val buckets = Lineage.cut(simhash(docs)
       .select(col("doc_id"), col("simhash"), explode(array(bandCols: _*)).as("bk"))
-      .select(col("doc_id"), col("simhash"), col("bk.band").as("band"), col("bk.sig").as("sig"))
-      .localCheckpoint()
+      .select(col("doc_id"), col("simhash"), col("bk.band").as("band"), col("bk.sig").as("sig")))
     Lsh.cappedSelfJoin(buckets, Seq("band", "sig"), "doc_id", maxBandBucket)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         col("a.simhash").as("sh_a"), col("b.simhash").as("sh_b"))

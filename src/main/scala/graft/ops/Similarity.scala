@@ -447,10 +447,12 @@ object Similarity {
     // cosineHof recomputed BOTH self-dots (sqrt(dot(a,a)), sqrt(dot(b,b)))
     // inside the O(cell²) pair filter — 3 interpreted HOF dots per
     // candidate pair; sqrt(dvdot(v,v)) here is the identical value
-    // computed once per row in codegen
+    // computed once per row in codegen. A vector holding a null
+    // element gets a NULL norm — the ragged-vector policy of
+    // `pairCosPrenormedAB`
     v.withColumn("cell", cellCol)
-      .withColumn("nrm",
-        sqrt(graft.functions.GraftFunctions.dvdot(col("embedding"), col("embedding"))))
+      .withColumn("nrm", when(!exists(col("embedding"), _.isNull),
+        sqrt(graft.functions.GraftFunctions.dvdot(col("embedding"), col("embedding")))))
   }
 
   /** Pair cosine over the precomputed norms of `portableAssigned` rows:
@@ -464,10 +466,19 @@ object Similarity {
     * aliases `a`/`b` that `Lsh.cappedSelfJoin` establishes — it is
     * valid ONLY as a `cellPairs` cos callback over a `portableAssigned`
     * input, never as a free-standing column builder.
+    *
+    * RAGGED-VECTOR POLICY: a pair whose vectors differ in length, or
+    * where either holds a null element, gets a NULL cosine — never a
+    * duplicate, so both documents are KEPT (the "NULL score = keep"
+    * rule of every other degraded input). `dvdot` alone would score a
+    * partial dot over the shorter side with nulls as 0, and could drop
+    * a document on it; DuckDB's `list_dot_product` rejects such pairs
+    * outright.
     */
   private def pairCosPrenormedAB(a: Column, b: Column): Column =
-    graft.functions.GraftFunctions.dvdot(a, b) /
-      (col("a.nrm") * col("b.nrm") + lit(1e-12))
+    when(size(a) === size(b),
+      graft.functions.GraftFunctions.dvdot(a, b) /
+        (col("a.nrm") * col("b.nrm") + lit(1e-12)))
 
   /** Semantic near-dup PAIRS from the portable path: (vec_a, vec_b)
     * with vec_a < vec_b and double cosine ≥ minCos — the edge set for

@@ -1,7 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.SparkTestHooks
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.job.CorpusPipeline
 
 /** Catalyst plan audits (SURVEY.md §4.2 "rely on, verify in tests"):
   * predicate pushdown reaches the parquet scan, small joins broadcast,
@@ -23,6 +27,42 @@ class PlanAuditSpec extends AnyFunSuite {
 
   private def plan(q: String): String =
     SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan.toString
+
+  /** Every physical plan `CorpusPipeline.run` executes — each stage cut,
+    * the near-dup loop's edge cut and rounds, the stage-count job — plus
+    * a noop write of `kept`: the plans production runs, each cut at the
+    * library's own lineage boundaries. Captured by a query-execution
+    * listener; the bus is drained before the plans are read.
+    */
+  private def pipelinePlans(run: => CorpusPipeline.Result): Seq[String] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      run.kept.write.format("noop").mode("overwrite").save()
+      SparkTestHooks.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val out = plans.asScala.toSeq
+    info(s"${out.size} executed plans")
+    // stage cuts, edge cut, ≥ 1 round (cut + count), counts, write
+    assert(out.size >= 9, s"only ${out.size} executed plans captured")
+    out
+  }
+
+  private def assertNoneContain(plans: Seq[String], nodes: String*): Unit =
+    for (p <- plans; n <- nodes) assert(!p.contains(n), s"$n in an executed plan:\n$p")
+
+  private def pipelineDocs(n: Int): DataFrame = {
+    import org.apache.spark.sql.functions._
+    spark.range(0, n).select(
+      concat(lit("https://h.io/p"), col("id")).as("url"),
+      concat(lit("text body shared prefix words here count "), col("id")).as("text"))
+  }
 
   test("q2: filter is pushed to the parquet scan") {
     val p = plan("q2_filter_project")
@@ -103,21 +143,21 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("x7: composed pipeline plans no cartesian/window/cached branch (r6)") {
-    import org.apache.spark.sql.functions._
-    // identity checkpoint seam keeps the WHOLE composed lineage visible
-    // — the audit sees extraction-input scan through the final
-    // anti-join as one plan instead of checkpoint-truncated stumps
-    val docs = spark.range(0, 30).select(
-      concat(lit("https://h.io/p"), col("id")).as("url"),
-      concat(lit("text body shared prefix words here count "), col("id")).as("text"))
-    val res = graft.job.CorpusPipeline.run(docs, checkpoint = df => df)
-    val p = res.kept.queryExecution.executedPlan.toString
-    assert(!p.contains("CartesianProduct"), p)
-    assert(!p.contains("BroadcastNestedLoopJoin"), p)
-    assert(!p.contains("Window"), p)
-    assert(!p.contains("InMemoryTableScan"), p)
-    // canonical-row picks are min_by hash aggregates, not windows
-    assert(p.contains("HashAggregate") || p.contains("ObjectHashAggregate"), p)
+    val plans = pipelinePlans(CorpusPipeline.run(pipelineDocs(30)))
+    assertNoneContain(plans, "CartesianProduct", "BroadcastNestedLoopJoin",
+      "Window", "InMemoryTableScan")
+    // no global sort anywhere in the pair/edge stages (or any other):
+    // a range exchange also costs a sampling job
+    assertNoneContain(plans, "rangepartitioning")
+    // canonical-row picks (url canon + exact dedup) are min_by
+    // aggregates, not windows. min_by's string buffer rules out the
+    // hash aggregate: each pick runs as a SortAggregate (a partition-
+    // local sort after the hash exchange, no global sort)
+    val picks = plans.filter(_.contains("min_by("))
+    assert(picks.size >= 2, plans.mkString("\n\n"))
+    picks.foreach(p => assert(p.contains("Aggregate(key="), p))
+    assert(plans.exists(p => p.contains("HashAggregate") || p.contains("ObjectHashAggregate")),
+      plans.mkString("\n\n"))
   }
 
   test("q23/d10: host cap and line dedup plan no window, no cartesian (r6)") {
@@ -133,18 +173,10 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!p10.contains("Window"), p10)
     assert(!p10.contains("CartesianProduct"), p10)
 
-    // the full-lineage pipeline with BOTH r6 options on stays clean
-    import org.apache.spark.sql.functions._
-    val docs = spark.range(0, 30).select(
-      concat(lit("https://h.io/p"), col("id")).as("url"),
-      concat(lit("text body shared prefix words here count "), col("id")).as("text"))
-    val res = graft.job.CorpusPipeline.run(docs,
-      boilerplateLineMinDocs = Some(5), maxDocsPerHost = Some(10),
-      checkpoint = df => df)
-    val p = res.kept.queryExecution.executedPlan.toString
-    assert(!p.contains("CartesianProduct"), p)
-    assert(!p.contains("Window"), p)
-    assert(!p.contains("InMemoryTableScan"), p)
+    // every plan the pipeline executes with BOTH r6 options on stays clean
+    val plans = pipelinePlans(CorpusPipeline.run(pipelineDocs(30),
+      boilerplateLineMinDocs = Some(5), maxDocsPerHost = Some(10)))
+    assertNoneContain(plans, "CartesianProduct", "Window", "InMemoryTableScan")
   }
 
   test("d12/q24/q25: decontam broadcasts the bench side; sampling and repair are pure filters/projections (r6b)") {
@@ -167,22 +199,15 @@ class PlanAuditSpec extends AnyFunSuite {
     // made this vacuous (every plan has a Project; r7, ADVICE)
     assert(p25.contains("graft_fix_mojibake"), p25)
 
-    // the full-lineage pipeline with ALL r6 options on stays clean
+    // every plan the pipeline executes with ALL r6 options on stays clean
     import org.apache.spark.sql.functions._
-    val docs = spark.range(0, 30).select(
-      concat(lit("https://h.io/p"), col("id")).as("url"),
-      concat(lit("text body shared prefix words here count "), col("id")).as("text"))
     val bench = spark.range(0, 2).select(col("id").as("bench_id"),
       concat(lit("bench item words that never match anything "), col("id")).as("text"))
-    val res = graft.job.CorpusPipeline.run(docs,
+    val plans = pipelinePlans(CorpusPipeline.run(pipelineDocs(30),
       boilerplateLineMinDocs = Some(5), maxDocsPerHost = Some(10),
       repairMojibake = true, decontamBench = Some(bench),
-      sampleByLang = Some(Map("fr" -> 0.5)),
-      checkpoint = df => df)
-    val p = res.kept.queryExecution.executedPlan.toString
-    assert(!p.contains("CartesianProduct"), p)
-    assert(!p.contains("Window"), p)
-    assert(!p.contains("InMemoryTableScan"), p)
+      sampleByLang = Some(Map("fr" -> 0.5))))
+    assertNoneContain(plans, "CartesianProduct", "Window", "InMemoryTableScan")
   }
 
   test("s7/s8/q26: semantic dedup and LM quality plan no cartesian/window; cap guard broadcasts (r6c)") {
@@ -209,25 +234,15 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!p27.contains("CartesianProduct"), p27)
     assert(!p27.contains("Window"), p27)
 
-    // pipeline `5b_semdedup` stage audited through its own identity
-    // seam — NOT added to the every-option test above: SemDeDup's
-    // bounded driver collects (k-means sample, dim probe) re-execute
-    // the full un-truncated lineage under an identity checkpoint, so
-    // combining it with all six other options multiplies an already
-    // heavy audit for no extra plan information
+    // every plan of the pipeline's `5b_semdedup` stage — including
+    // SemDeDup's bounded driver collects (k-means sample, dim probe)
     import org.apache.spark.sql.functions._
-    val docs = spark.range(0, 20).select(
-      concat(lit("https://h.io/p"), col("id")).as("url"),
-      concat(lit("text body shared prefix words here count "), col("id")).as("text"))
     val emb = spark.range(0, 8).select(
       concat(lit("https://h.io/p"), col("id")).as("url"),
       array(lit(0.5f), (col("id") % 3).cast("float") - lit(1.0f),
         lit(-0.5f), lit(0.25f)).as("embedding"))
-    val res = graft.job.CorpusPipeline.run(docs,
-      semDedupEmbeddings = Some(emb), checkpoint = df => df)
-    val p = res.kept.queryExecution.executedPlan.toString
-    assert(!p.contains("CartesianProduct"), p)
-    assert(!p.contains("Window"), p)
-    assert(!p.contains("InMemoryTableScan"), p)
+    val plans = pipelinePlans(CorpusPipeline.run(pipelineDocs(20),
+      semDedupEmbeddings = Some(emb)))
+    assertNoneContain(plans, "CartesianProduct", "Window", "InMemoryTableScan")
   }
 }

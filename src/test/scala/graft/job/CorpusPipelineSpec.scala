@@ -66,20 +66,24 @@ class CorpusPipelineSpec extends AnyFunSuite {
       .collect().head.getString(1)
     assert(keptA.endsWith("original"), keptA)
 
-    // the CLUSTER substitution: the same chain through RELIABLE
-    // checkpoint() (fault-tolerant, directory-backed) must produce the
-    // identical stage counts and kept set — the seam is a working
-    // deployment path, not a comment (VERDICT r5 "wrong" #2)
+    // the CLUSTER deployment: a checkpoint directory alone switches
+    // every lineage cut to RELIABLE checkpoints (fault-tolerant,
+    // directory-backed); the chain must write its cuts there and produce
+    // the identical stage counts and kept set (VERDICT r5 "wrong" #2)
     val ckptDir = java.nio.file.Files.createTempDirectory("graft_ckpt")
+    def files() = java.nio.file.Files.walk(ckptDir).iterator().asScala.toSeq
     spark.sparkContext.setCheckpointDir(ckptDir.toString)
     try {
-      val res2 = CorpusPipeline.run(df, checkpoint = _.checkpoint())
+      val res2 = CorpusPipeline.run(df)
       assert(res2.stages.collect().map(r => r.getString(0) -> r.getLong(1)).toMap == stages)
       assert(res2.kept.collect().map(_.getString(0)).toSet == kept)
+      assert(files().exists(java.nio.file.Files.isRegularFile(_)),
+        s"no checkpoint files under $ckptDir")
     } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(ckptDir).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
+      // every suite shares this SparkContext: later ones must not
+      // silently switch to reliable checkpoints
+      org.apache.spark.SparkTestHooks.clearCheckpointDir(spark.sparkContext)
+      files().reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
     }
   }
 

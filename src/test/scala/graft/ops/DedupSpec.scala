@@ -288,19 +288,21 @@ class DedupSpec extends AnyFunSuite {
     assert(got2 == (1L to 6L).map(_ -> 1L).toMap, got2.toString)
   }
 
-  test("nearDupClusters: checkpoint seam + convergence status exposed by value") {
-    // injected seam: cluster callers substitute reliable checkpoint();
-    // count invocations to prove every round flows through it
-    var cuts = 0
-    val seam: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-      df => { cuts += 1; df.localCheckpoint() }
+  test("nearDupClusters: labels plan size flat across rounds + convergence status") {
     val chain = spark.createDataFrame(
       (1L until 8L).map(i => (i, i + 1))).toDF("doc_a", "doc_b")
-    val (labels, converged, rounds) = Dedup.nearDupClustersStatus(chain, checkpoint = seam)
+    val (labels, converged, rounds) = Dedup.nearDupClustersStatus(chain)
     assert(converged && rounds >= 2, s"converged=$converged rounds=$rounds")
-    // r7: init labels no longer checkpoint (one-op lineage over the
-    // materialized edges) — the seam must still cut edges + every round
-    assert(cuts >= rounds + 1, s"seam must cut edges+every round: $cuts vs $rounds")
+    // the loop cuts the edges and every round itself: the labels'
+    // analyzed plan is as small after the 7-edge chain's rounds as
+    // after a single edge's, so no plan grows with the round count
+    val one = spark.createDataFrame(Seq((1L, 2L))).toDF("doc_a", "doc_b")
+    val (labels1, _, rounds1) = Dedup.nearDupClustersStatus(one)
+    assert(rounds1 < rounds, s"1 edge: $rounds1 rounds, chain: $rounds")
+    def nodes(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collect { case n => n }.size
+    assert(nodes(labels) == nodes(labels1),
+      s"labels plan grew with rounds:\n${labels.queryExecution.analyzed}")
     assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       (1L to 8L).map(_ -> 1L).toMap)
     // a diameter > maxIter component must report NON-convergence by

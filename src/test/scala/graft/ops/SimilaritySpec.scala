@@ -349,6 +349,29 @@ class SimilaritySpec extends AnyFunSuite {
       }
   }
 
+  test("portable semantic path: ragged and null-element vectors get a NULL cosine, both docs kept") {
+    // planted vector with its mass in the first coords, so a partial
+    // dot over a prefix (or with a null read as 0) would score ≥ 0.92
+    val planted = Seq.tabulate(dim)(i => if (i < 4) 1.0f - 0.2f * i else 0.05f)
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("vec_id", org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("embedding", org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.FloatType, containsNull = true))))
+    def row(id: Long, v: Seq[Any]) = org.apache.spark.sql.Row(id, v)
+    import scala.jdk.CollectionConverters._
+    val corpus = spark.createDataFrame(Seq(
+      row(1L, planted),
+      row(2L, planted.take(4)),                        // short prefix copy
+      row(3L, planted.updated(10, null)),              // null-element copy
+      row(4L, planted.map(_ * 2.0f))).asJava, schema)  // honest scaled copy
+    val pairs = Similarity.semanticPairsPortable(corpus).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs == Set((1L, 4L)), pairs.toString)
+    val kept = Similarity.semDedupPortable(corpus).collect()
+      .map(r => r.getLong(0) -> r.getBoolean(2)).toMap
+    assert(kept == Map(1L -> true, 2L -> true, 3L -> true, 4L -> false), kept.toString)
+  }
+
   test("semDedup plans: no cartesian product, broadcast cap guard") {
     val (all, _) = withScaledCopies(clustered(6, 20, 0.3))
     Seq(Similarity.semDedup(all, dim), Similarity.semDedupPortable(all)).foreach { df =>
